@@ -169,16 +169,14 @@ def test_cc_rewrap_fallback_on_poisoned_checkpoint_input(spark):
     rows += [(6000 + j, f"unrelated doc {j} about columnar engines {j}")
              for j in range(7)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    docs, rep_pairs, elig_ids, _rg = _minhash_rep_level(
-        df, 3, 128, 32, 0.7, "text", "doc_id", 512, with_elig=True,
+    docs, rep_pairs, elig_rg = _minhash_rep_level(
+        df, 3, 128, 32, 0.7, "text", "doc_id", 512, with_groups=True,
     )
     members = docs.select("grp", "id")
     rg = members.groupBy("grp").agg(
         F.min("id").alias("rid"), F.count(F.lit(1)).alias("csize")
     )
-    eg = rg.filter(F.col("csize") > 1).join(
-        elig_ids.select(F.col("id").alias("rid")), "rid"
-    )
+    eg = rg.filter(F.col("csize") > 1).join(elig_rg.select("rid"), "rid")
     star = (
         members.join(eg.select("grp", "rid"), "grp")
         .where(F.col("id") != F.col("rid"))

@@ -791,3 +791,36 @@ def test_shingles_col_let_binding_equivalence(spark):
         .count()
     )
     assert diff == 0
+
+
+@pytest.mark.parametrize("entry", [
+    "minhash_lsh_pairs", "build_neardup_index", "CheckpointedDedup",
+])
+def test_bands_must_divide_num_perm(spark, docs, tmp_path, entry):
+    """A banding that does not tile the signature refuses up front."""
+    from tetrex_spark.lineage import CheckpointedDedup
+    from tetrex_spark.operators.incremental import build_neardup_index
+
+    d = str(tmp_path / "out")
+    run = {
+        "minhash_lsh_pairs": lambda: minhash_lsh_pairs(docs, num_perm=128, bands=30),
+        "build_neardup_index": lambda: build_neardup_index(
+            docs, d, num_perm=128, bands=30),
+        "CheckpointedDedup": lambda: CheckpointedDedup(
+            d, num_perm=128, bands=30).run(docs),
+    }[entry]
+    with pytest.raises(ValueError, match="must divide num_perm"):
+        run()
+
+
+def test_band_buckets_rejects_stored_keys_of_other_banding(spark, docs):
+    """Band keys stored under 16 bands, read as 32: band_buckets must
+    raise instead of bucketing under the wrong plan."""
+    from pyspark.errors import SparkRuntimeException
+
+    from tetrex_spark.operators.dedup import band_buckets, minhash_sig_table
+
+    ss = minhash_sig_table(docs, 3, 128, 16)
+    assert band_buckets(ss, 16, 8).count() > 0
+    with pytest.raises(SparkRuntimeException, match="expected bands=32"):
+        band_buckets(ss, 32, 4).collect()

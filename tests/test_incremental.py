@@ -252,3 +252,25 @@ def test_cli_ndindex_ndgate_end_to_end(spark, tmp_path, capsys):
     kept = spark.read.parquet(out2)
     assert [r["doc_id"] for r in kept.collect()] == [1002]
     assert set(kept.columns) == {"doc_id", "text"}
+
+
+@pytest.mark.parametrize("builder", ["membership", "neardup"])
+def test_failed_index_write_propagates_and_releases(spark, tmp_path, builder):
+    """An index write that fails (out_dir under a regular file) raises to
+    the caller and leaves no persisted or checkpointed frame behind."""
+    from tetrex_spark.operators.incremental import build_neardup_index
+
+    blocker = tmp_path / "not_a_dir"
+    blocker.write_text("x")
+    out_dir = str(blocker / "idx")
+    build = {
+        "membership": lambda: build_membership_index(
+            _corpus(spark, REF_TEXTS), out_dir, n_buckets=16),
+        "neardup": lambda: build_neardup_index(
+            _corpus(spark, REF_TEXTS), out_dir, threshold=0.5),
+    }[builder]
+    sc = spark.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception, match="not_a_dir"):
+        build()
+    assert sc._jsc.getPersistentRDDs().size() == before

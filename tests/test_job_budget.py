@@ -67,3 +67,21 @@ def test_simhash_pairs_job_budget(spark, corpus):
     assert "FileScan" not in plan and "Scan parquet" not in plan
     _, n_count = _jobs(spark, "sh-count", lambda: df.count())
     assert n_count <= 13, f"simhash count ran {n_count} jobs"
+
+
+def test_minhash_lsh_edges_job_budget(spark, corpus):
+    """The in-session keep-list input: rep-level pairs plus star edges,
+    read from the same two checkpoints as the pair list."""
+    from tetrex_spark.operators.dedup import minhash_lsh_edges
+
+    corpus.count()
+    df, n_construct = _jobs(
+        spark, "mhe-construct", lambda: minhash_lsh_edges(corpus, threshold=0.8)
+    )
+    # kernel checkpoint + fused rep_pairs/members checkpoint + cap-stats
+    # finisher (+ AQE stage jobs inside each); 15 at 4 cores
+    assert n_construct <= 18, f"minhash edges construction ran {n_construct} jobs"
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan" not in plan and "Scan parquet" not in plan
+    _, n_count = _jobs(spark, "mhe-count", lambda: df.count())
+    assert n_count <= 6, f"minhash edges count ran {n_count} jobs"

@@ -297,13 +297,44 @@ def test_checkpoint_layout_guard(spark, tmp_path):
     os.makedirs(d)
     legacy = {"k": 3, "num_perm": 128, "bands": 32, "threshold": 0.8,
               "max_bucket": 512, "n_chunks": 4}
-    with open(f"{d}/params_dedup-0.json", "w") as f:
-        f.write(json.dumps(legacy, sort_keys=True))
-    with pytest.raises(ValueError, match="layout"):
-        CheckpointedDedup(d, n_chunks=4)
+    # no marker (bare artifact paths), then layout 2 (namespaced paths,
+    # but sigsets without grp/csize/bhs and rep pairs without grp_a/b)
+    for stored_params in (legacy, {**legacy, "_layout": 2}):
+        with open(f"{d}/params_dedup-0.json", "w") as f:
+            f.write(json.dumps(stored_params, sort_keys=True))
+        with pytest.raises(ValueError, match="layout"):
+            CheckpointedDedup(d, n_chunks=4)
     # a checkpoint created by THIS version reopens cleanly
     d2 = str(tmp_path / "fresh")
     CheckpointedDedup(d2, n_chunks=4)
     CheckpointedDedup(d2, n_chunks=4)
     stored = json.loads(open(f"{d2}/params_dedup-0.json").read())
     assert stored["_layout"] == _StagedCheckpoint.LAYOUT_VERSION
+
+
+@pytest.mark.parametrize("entry,value", [
+    ("minhash_lsh_pairs", "jaccard"),
+    ("simhash_pairs", "hamming"),
+    ("CheckpointedDedup", "jaccard"),
+    ("CheckpointedSimhashDedup", "hamming"),
+])
+def test_rep_level_output_schema(spark, dedup_docs, tmp_path, entry, value):
+    """Rep-level outputs (expand_exact_dups=False) carry exactly the
+    documented pair columns; the rep-group keys stay internal."""
+    from tetrex_spark.lineage import CheckpointedDedup, CheckpointedSimhashDedup
+    from tetrex_spark.operators.dedup import minhash_lsh_pairs, simhash_pairs
+
+    d = str(tmp_path / "ckpt")
+    run = {
+        "minhash_lsh_pairs": lambda: minhash_lsh_pairs(
+            dedup_docs, k=3, threshold=0.7, expand_exact_dups=False),
+        "simhash_pairs": lambda: simhash_pairs(
+            dedup_docs, n_blocks=4, expand_exact_dups=False),
+        "CheckpointedDedup": lambda: CheckpointedDedup(
+            d, threshold=0.7, n_chunks=2).run(dedup_docs, expand_exact_dups=False),
+        "CheckpointedSimhashDedup": lambda: CheckpointedSimhashDedup(
+            d, n_blocks=4, n_chunks=2).run(dedup_docs, expand_exact_dups=False),
+    }[entry]
+    out = run()
+    assert out.columns == ["id_a", "id_b", value]
+    assert out.count() > 0

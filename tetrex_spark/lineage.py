@@ -162,14 +162,15 @@ class _StagedCheckpoint:
     incomplete results."""
 
     # Artifact-layout version, recorded in every params_<build_id>.json:
-    # 2 = build_id-namespaced artifact paths (sigsets_<id>/ etc.); the
-    # unversioned layer-1 layout (bare sigsets/, rep_pairs/) predates the
-    # marker entirely. A checkpoint written under a different layout must
-    # refuse at open time with a clear message — its params fingerprint
-    # would otherwise still match and resume would skip the committed
-    # stages, then die with an opaque parquet path-not-found on the old
-    # artifact paths.
-    LAYOUT_VERSION = 2
+    # 3 = build_id-namespaced artifact paths (sigsets_<id>/ etc.), MinHash
+    # sigsets in the minhash_sig_table layout (id, s, grp, csize, bhs) and
+    # rep_pairs of both families carrying (grp_a, grp_b). A checkpoint
+    # written under any other layout (no marker = the bare sigsets/,
+    # rep_pairs/ paths) must refuse at open time with a clear message —
+    # its params fingerprint would otherwise still match and resume would
+    # skip the committed stages, then fail on paths or columns this code
+    # no longer writes.
+    LAYOUT_VERSION = 3
 
     def __init__(
         self, checkpoint_dir: str, *, params: dict, build_id: str,
@@ -289,18 +290,24 @@ class _StagedCheckpoint:
 
 class CheckpointedDedup(_StagedCheckpoint):
     """Resumable MinHash-LSH near-dup pipeline (the dedup counterpart of
-    CheckpointedBuild — round-2 review asked for exactly this).
+    CheckpointedBuild).
 
     Stage model, each committed to the JSONL lineage log:
 
-      sigsets:<i>  the rep-level fused signature+set table, in
-                   `n_chunks` deterministic chunks of the rep id space
+      sigsets:<i>  the rep-level sig table, in `n_chunks`
+                   deterministic chunks of the rep id space
                    (pmod(xxhash64(id), n_chunks) — stable across runs
                    and parallelism), each written atomically to
-                   `<dir>/sigsets_<build_id>/chunk=<i>/`.
+                   `<dir>/sigsets_<build_id>/chunk=<i>/`. Columns are the
+                   in-session layout (operators.dedup.minhash_sig_table):
+                   id (rep = min doc id of its exact-dup group), s (sorted
+                   shingle-hash set), grp (md5 group key), csize (group
+                   member count), bhs (the `bands` band-bucket keys).
+                   Only reps with >= k tokens have a row.
       pairs        verified rep-level near-dup pairs computed FROM THE
                    STORED sigset chunks (banding + cap + exact-Jaccard
-                   verify), written to `<dir>/rep_pairs_<build_id>/`.
+                   verify), written to `<dir>/rep_pairs_<build_id>/` as
+                   (id_a, id_b, jaccard, grp_a, grp_b).
 
     A killed job resumes at the first uncommitted stage; the expanded
     member-level pair list (and any clustering on top — the CC rounds
@@ -322,8 +329,9 @@ class CheckpointedDedup(_StagedCheckpoint):
         n_chunks: int = 8,
         build_id: str = "dedup-0",
     ):
-        if num_perm % bands:
-            raise ValueError("bands must divide num_perm")
+        from .operators.dedup import _rows_per_band
+
+        _rows_per_band(num_perm, bands)  # refuse before any stage runs
         self.k, self.num_perm, self.bands = k, num_perm, bands
         self.threshold, self.max_bucket = threshold, max_bucket
         self.n_chunks = n_chunks
@@ -351,12 +359,13 @@ class CheckpointedDedup(_StagedCheckpoint):
         expand_exact_dups: bool = True,
     ) -> DataFrame | None:
         """Build (or resume) the pipeline; returns the member-level pair
-        DataFrame (rep-level with expand_exact_dups=False), or None when
-        `stop_after` simulated a kill."""
+        DataFrame (rep-level with expand_exact_dups=False) with exactly
+        the columns (id_a, id_b, jaccard), or None when `stop_after`
+        simulated a kill."""
         from .operators.dedup import (
             dup_groups,
             expand_rep_pairs,
-            minhash_sigs_and_sets,
+            minhash_sig_table,
             verify_rep_pairs,
         )
 
@@ -365,9 +374,10 @@ class CheckpointedDedup(_StagedCheckpoint):
         done = self.committed() if resume else set()
         if self._run_chunk_stages(
             spark, "sigsets", "sigsets",
-            lambda chunk: minhash_sigs_and_sets(
-                self._chunk_filter(reps, "id", chunk),
-                self.k, self.num_perm, "txt", "id",
+            lambda chunk: minhash_sig_table(
+                self._chunk_filter(reps, "id", chunk), self.k,
+                self.num_perm, self.bands, "txt", "id",
+                passthrough=("grp", "csize"),
             ),
             done, stop_after,
         ):
@@ -377,7 +387,7 @@ class CheckpointedDedup(_StagedCheckpoint):
 
         def make_pairs():
             return verify_rep_pairs(
-                ss, bands=self.bands, r=self.num_perm // self.bands,
+                ss, bands=self.bands,
                 threshold=self.threshold, max_bucket=self.max_bucket,
                 release=handles,
             )
@@ -392,14 +402,14 @@ class CheckpointedDedup(_StagedCheckpoint):
             return None
         rep_pairs = spark.read.parquet(self._apath("rep_pairs"))
         if not expand_exact_dups:
-            return rep_pairs
-        # eligibility comes straight from the STORED sigset chunks (the
-        # rows there are exactly the shingle-eligible reps) — no text
-        # re-derivation on resume; the (grp, id) membership frame is
-        # checkpointed once (~40 B/doc) so the expansion's branches read
-        # a cache instead of re-scanning the raw text per branch
+            return rep_pairs.select("id_a", "id_b", "jaccard")
+        # intra eligibility comes straight from the STORED sigset chunks
+        # (one row per shingle-eligible rep group) — no text re-derivation
+        # on resume; the (grp, id) membership frame is checkpointed once
+        # (~40 B/doc) so the expansion's branches read a cache instead of
+        # re-scanning the raw text per branch
         members = docs.select("grp", "id").localCheckpoint(eager=True)
-        return expand_rep_pairs(members, rep_pairs, ss.select("id"))
+        return expand_rep_pairs(members, rep_pairs, ss.select("grp", "csize"))
 
 
 class CheckpointedSimhashDedup(_StagedCheckpoint):
@@ -414,7 +424,8 @@ class CheckpointedSimhashDedup(_StagedCheckpoint):
       pairs    rep-level pairs computed FROM THE STORED fingerprint
                chunks (identical-simhash collapse + pigeonhole blocking
                + bit_count verify), written to
-               `<dir>/rep_pairs_<build_id>/`.
+               `<dir>/rep_pairs_<build_id>/` as
+               (id_a, id_b, hamming, grp_a, grp_b).
 
     The member-level expansion is recomputed lazily from (stored fps,
     stored rep_pairs) — a resumed run is byte-identical to a single-shot
@@ -460,10 +471,14 @@ class CheckpointedSimhashDedup(_StagedCheckpoint):
         stop_after: str | None = None,
         expand_exact_dups: bool = True,
     ) -> DataFrame | None:
+        """Build (or resume) the pipeline; returns the member-level pair
+        DataFrame (rep-level with expand_exact_dups=False) with exactly
+        the columns (id_a, id_b, hamming), or None when `stop_after`
+        simulated a kill."""
         from .operators.dedup import (
+            _simhash_rep_level,
             expand_simhash_rep_pairs,
             simhash,
-            simhash_pairs_from_fingerprints,
         )
 
         spark = df.sparkSession
@@ -479,10 +494,10 @@ class CheckpointedSimhashDedup(_StagedCheckpoint):
         sh = spark.read.parquet(*self._chunk_paths("fps"))
 
         def make_pairs():
-            return simhash_pairs_from_fingerprints(
-                sh.persist(), self.max_hamming, n_blocks=self.n_blocks,
-                max_bucket=self.max_bucket, expand_exact_dups=False,
-            )
+            return _simhash_rep_level(
+                sh.persist(), self.max_hamming, self.n_blocks,
+                self.max_bucket, with_groups=False,
+            )[1]
 
         killed = self._run_write_stage(
             spark, "pairs", "rep_pairs", make_pairs,
@@ -493,7 +508,7 @@ class CheckpointedSimhashDedup(_StagedCheckpoint):
             return None
         rep_pairs = spark.read.parquet(self._apath("rep_pairs"))
         if not expand_exact_dups:
-            return rep_pairs
+            return rep_pairs.select("id_a", "id_b", "hamming")
         return expand_simhash_rep_pairs(sh, rep_pairs)
 
 

@@ -269,33 +269,55 @@ def minhash_sigs_and_sets(
 
 def band_hashes_col(bands: int, r: int, sig_col: str = "sig"):
     """array<long> of the `bands` band-bucket keys of a signature column
-    — element b = xxhash64 of the band's signature slice. Precomputing
-    this ONCE into a materialized sig table replaces the 128-long
-    signature with `bands` longs (4x smaller checkpoint rows) and every
-    downstream band_buckets read explodes stored values instead of
-    re-hashing slices per consumer."""
+    — element b = xxhash64 of the band's signature slice."""
     return F.array(
         *[F.xxhash64(F.slice(sig_col, b * r + 1, r)) for b in range(bands)]
     )
 
 
+def _rows_per_band(num_perm: int, bands: int) -> int:
+    if num_perm % bands:
+        raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
+    return num_perm // bands
+
+
+def minhash_sig_table(
+    df: DataFrame, k: int, num_perm: int, bands: int,
+    text_col: str = "text", id_col: str = "doc_id",
+    passthrough: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one MinHash sig-table layout that every near-dup mode
+    (in-session, staged, frozen-index) materializes and reads:
+    (id, s, *passthrough, bhs) — the sorted shingle-hash set `s` for the
+    exact verify and the `bands` band-bucket keys `bhs` for blocking,
+    from ONE kernel pass. The num_perm-long signature is not kept:
+    blocking is its only consumer, and the band keys are num_perm/bands
+    times smaller. Raises ValueError unless bands divides num_perm. Lazy:
+    the caller checkpoints or writes it."""
+    r = _rows_per_band(num_perm, bands)
+    return minhash_sigs_and_sets(
+        df, k, num_perm, text_col, id_col, passthrough
+    ).select("id", "s", *passthrough, band_hashes_col(bands, r).alias("bhs"))
+
+
 def band_buckets(sig_df: DataFrame, bands: int, r: int) -> DataFrame:
     """(id, band, bh) rows from a signature table — one row per (doc, band),
     bucket key = xxhash64 of the band's signature slice (JVM-side). A
-    table carrying a precomputed `bhs` column (see band_hashes_col) is
-    exploded directly — same values, no per-read hashing."""
+    table with stored band keys (`bhs`, see minhash_sig_table) is
+    exploded directly, and every row must carry exactly `bands` keys:
+    keys stored under another banding raise at read time (checked inside
+    the explode projection — no extra job) instead of bucketing under the
+    wrong plan. `r` is read only for a `sig` table."""
     if "bhs" in sig_df.columns:
-        return sig_df.select("id", F.posexplode("bhs").alias("band", "bh"))
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(F.slice("sig", b * r + 1, r)).alias("bh"),
+        bhs = F.when(F.size("bhs") == bands, F.col("bhs")).otherwise(
+            F.raise_error(F.format_string(
+                f"stored bhs has %d band keys per row, expected bands={bands}",
+                F.size("bhs"),
+            ))
         )
-        for b in range(bands)
-    ]
-    return sig_df.select(
-        "id", F.explode(F.array(*band_cols)).alias("bb")
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
+    else:
+        bhs = band_hashes_col(bands, r)
+    return sig_df.select("id", F.posexplode(bhs).alias("band", "bh"))
 
 
 def capped_candidate_pairs(
@@ -503,113 +525,82 @@ def minhash_lsh_pairs(
          table plus rep-level near-dup pairs, not the quadratic pair list).
 
     md5 collision risk for the pre-collapse is ~n^2/2^128 — far below the
-    shingle-hash collision tolerance minhash itself assumes."""
-    members, rep_pairs, elig_ids, rg = _minhash_rep_level(
+    shingle-hash collision tolerance minhash itself assumes. Output
+    columns are exactly (id_a, id_b, jaccard) in both modes."""
+    members, rep_pairs, rg = _minhash_rep_level(
         df, k, num_perm, bands, threshold, text_col, id_col, max_bucket,
-        with_elig=expand_exact_dups,
+        with_groups=expand_exact_dups,
     )
     if not expand_exact_dups:
-        return rep_pairs
-    # 5. expand representative pairs to member pairs (cache-only plan —
-    # members and the rep-group aggregate are checkpointed; see
-    # expand_rep_pairs)
-    return expand_rep_pairs(members, rep_pairs, elig_ids, rg=rg)
+        return rep_pairs.select("id_a", "id_b", "jaccard")
+    # 5. expand representative pairs to member pairs (cache-only plan)
+    return expand_rep_pairs(members, rep_pairs, rg)
 
 
 def _minhash_rep_level(
     df, k, num_perm, bands, threshold, text_col, id_col, max_bucket,
-    *, with_elig: bool,
+    *, with_groups: bool,
 ):
     """Steps 1-4 of minhash_lsh_pairs (pre-collapse, fused sig+set pass,
     capped blocking, exact verify), shared with minhash_lsh_edges.
-    Returns (members, checkpointed rep_pairs, elig_ids, rg), where
-    `members` is a CHECKPOINTED (grp, id) frame and `rg` /`elig_ids`
-    are projections of the kernel checkpoint when with_elig (else the
-    lazy docs derivation and None): the rep-group key and member count
-    ride the sig pass as passthrough columns, so eligibility and the
-    (grp, rid, csize) aggregate cost zero extra scans or exchanges —
-    the r4 revision re-derived (grp, id) from the raw text in every
-    expansion branch (~4 parquet+md5 scans per consuming action), and
-    r5 still paid one corpus re-scan + one (grp, id) aggregate exchange
-    as extra union branches of the fused checkpoint. The whole
-    member-level expansion remains a cache-only plan.
+    Returns (members, rep_pairs, rg):
 
-    EXACTLY TWO eager jobs run here (plus one tiny cached-aggregate read
-    in the cap-stats finisher — asserted by tests/test_clusters.py's job
-    budget): the kernel pass is its own localCheckpoint (it runs ONCE by
-    construction — the r4 shape relied on a persist populated inside the
-    verify's broadcast subtree, which left the kernel exposed to
-    concurrent-stage double-compute the moment another union branch read
-    it), and one fused checkpoint materializes rep_pairs + elig_ids +
-    members from it in a single action. The sig/set checkpoint storage
-    is released by GC when this frame goes out of scope at return."""
-    if num_perm % bands:
-        raise ValueError("bands must divide num_perm")
-    r = num_perm // bands
+      rep_pairs  checkpointed (id_a, id_b, jaccard, grp_a, grp_b);
+      members    (grp, id) for every document, checkpointed together
+                 with rep_pairs, when with_groups, else None;
+      rg         (grp, rid, csize), one row per shingle-eligible rep
+                 group — a projection of the sig-table checkpoint (the
+                 rep-group key and member count ride the kernel pass as
+                 passthrough columns) when with_groups, else None.
+
+    Job contract (budgeted in tests/test_job_budget.py): the kernel runs
+    exactly once, in its own localCheckpoint that every branch reads;
+    one more eager job materializes rep_pairs (+ members) in a single
+    checkpoint; the cap-stats finisher adds one tiny cached-aggregate
+    read. Anything built on the returned frames is a cache-only plan —
+    the raw text is never re-scanned.
+
+    Release contract: the sig-table checkpoint lives as long as the
+    returned `rg` does (it is a projection of it), and the rep_pairs /
+    members checkpoint as long as those frames; Spark's ContextCleaner
+    frees each once its frames are garbage. With with_groups=False
+    nothing returned references the sig table."""
     # 1. exact-dup pre-collapse (map-side combine does the heavy lifting)
     docs, reps = dup_groups(df, text_col, id_col)
-    # 2. one fused kernel pass, checkpointed — every downstream branch
-    # (buckets, both verify sides, eligibility) reads the materialized
-    # table; the tokenize/hash kernel cannot run twice
-    # the checkpoint stores the `bands` band-bucket keys instead of the
-    # num_perm-long signature (4x smaller rows — the signature has no
-    # other consumer on this path) and every blocking read explodes
-    # stored values instead of re-hashing slices per consumer
-    ss = (
-        minhash_sigs_and_sets(
-            reps, k, num_perm, "txt", "id", passthrough=("grp", "csize")
-        )
-        .select("id", "s", "grp", "csize", band_hashes_col(bands, r).alias("bhs"))
-        .localCheckpoint(eager=True)
-    )
+    # 2. one fused kernel pass, checkpointed so the tokenize/hash kernel
+    # cannot run twice: buckets, both verify sides and rg all read it
+    ss = minhash_sig_table(
+        reps, k, num_perm, bands, "txt", "id", passthrough=("grp", "csize")
+    ).localCheckpoint(eager=True)
     # 3+4. capped blocking + exact verify on candidates only
     handles: list = []
     rp = verify_rep_pairs(
-        ss, bands=bands, r=r, threshold=threshold, max_bucket=max_bucket,
+        ss, bands=bands, threshold=threshold, max_bucket=max_bucket,
         release=handles,
     )
-    if with_elig:
-        nulls = [
-            F.lit(None).cast("long").alias("id_b"),
-            F.lit(None).cast("double").alias("jaccard"),
-        ]
-        mem = docs.select("grp", "id")
-        # eligibility and the rep-group aggregate are PROJECTIONS of the
-        # kernel checkpoint now (grp/csize ride the sig pass): the r5
-        # fused checkpoint carried them as two extra union branches, one
-        # of which re-scanned the corpus and re-aggregated (grp, id) —
-        # a full extra scan + exchange inside the construction action.
-        # Only the verified pairs and the per-doc membership still need
-        # materializing; note ss's checkpoint storage now stays alive as
-        # long as the returned elig/rg frames do (released together).
+    if with_groups:
+        # verified pairs and per-doc membership in ONE checkpoint
+        # (part-tagged union); rg needs no materializing of its own
         combined = (
-            rp.select(F.lit(0).alias("part"),
-                      F.lit(None).cast("string").alias("grp"),
-                      "id_a", "id_b", "jaccard", "grp_a", "grp_b")
+            rp.withColumn("part", F.lit(0))
             .unionByName(
-                mem.select(F.lit(2).alias("part"), "grp",
-                           F.col("id").alias("id_a"), *nulls,
-                           F.lit(None).cast("string").alias("grp_a"),
-                           F.lit(None).cast("string").alias("grp_b")))
+                docs.select(F.lit(1).alias("part"), "grp",
+                            F.col("id").alias("id_a")),
+                allowMissingColumns=True,
+            )
             .transform(lambda u: _compact(u, sizer=docs.select("grp", "id")))
             .localCheckpoint(eager=True)
         )
-        rep_pairs = combined.filter("part = 0").select(
-            "id_a", "id_b", "jaccard", "grp_a", "grp_b"
-        )
-        elig_ids = ss.select("id")
-        members = combined.filter("part = 2").select(
+        rep_pairs = combined.filter("part = 0").drop("part", "grp")
+        members = combined.filter("part = 1").select(
             "grp", F.col("id_a").alias("id")
         )
-        rg = ss.select(
-            "grp", F.col("id").alias("rid"), F.col("csize").alias("csize")
-        )
+        rg = ss.select("grp", F.col("id").alias("rid"), "csize")
     else:
-        rep_pairs = rp.localCheckpoint(eager=True)
-        elig_ids, members, rg = None, docs, None
+        rep_pairs, members, rg = rp.localCheckpoint(eager=True), None, None
     for fin in handles:
         fin()
-    return members, rep_pairs, elig_ids, rg
+    return members, rep_pairs, rg
 
 
 def minhash_lsh_edges(
@@ -631,22 +622,16 @@ def minhash_lsh_edges(
     clusters.connected_components / dedup_keep_list; keep
     minhash_lsh_pairs for consumers that need the actual pair list with
     jaccard values."""
-    members, rep_pairs, elig_ids, rg = _minhash_rep_level(
+    members, rep_pairs, rg = _minhash_rep_level(
         df, k, num_perm, bands, threshold, text_col, id_col, max_bucket,
-        with_elig=True,
+        with_groups=True,
     )
-    members = members.select("grp", "id")
-    # rg is a projection of the kernel checkpoint, whose rows are
-    # exactly the shingle-eligible representatives — the former
-    # eligibility join against elig_ids is a no-op on this path
-    elig_groups = rg.filter(F.col("csize") > 1)
-    # star branch FIRST: with the checkpointed rep_pairs frame as the
-    # union's left (attribute-defining) branch, this Spark's AQE fails to
-    # re-plan derived localCheckpoints downstream (NoSuchElementException:
-    # key not found <attr> — hit by connected_components' round
-    # checkpoints); fresh star-side attributes avoid it, and
-    # connected_components additionally carries a re-wrap fallback.
-    return _star_edges(members, elig_groups).unionByName(
+    # star branch FIRST: a union whose attribute-defining branch is a
+    # checkpointed frame makes this Spark's AQE fail to re-plan derived
+    # localCheckpoints downstream (NoSuchElementException: key not found
+    # <attr>, e.g. in connected_components' round checkpoints); the star
+    # side mints fresh attributes
+    return _star_edges(members, rg.filter(F.col("csize") > 1)).unionByName(
         rep_pairs.select("id_a", "id_b")
     )
 
@@ -673,56 +658,41 @@ def dup_groups(
 
 
 def verify_rep_pairs(
-    ss: DataFrame, *, bands: int, r: int, threshold: float,
+    ss: DataFrame, *, bands: int, threshold: float,
     max_bucket: int | None, release: list | None = None,
 ) -> DataFrame:
-    """Rep-level near-dup pairs from a sig/set table: banded blocking
+    """Rep-level near-dup pairs (id_a, id_b, jaccard, grp_a, grp_b) from
+    a minhash_sig_table with the `grp` passthrough: banded blocking
     (size-capped) then exact-Jaccard verify on candidates only — the
     reference's filter-then-verify (query.h:265-281) transplanted to
     similarity. The (tiny) candidate-pair side is broadcast into two
     map-side joins; jaccard is array_intersect arithmetic on the sets.
-    `release` forwards to capped_candidate_pairs (cache-release
-    contract)."""
+    The rep-group keys ride the verify joins, so the member-level
+    expansion needs no rep-id -> group join. `release` forwards to
+    capped_candidate_pairs (cache-release contract)."""
     # persist stays ON for the bucket table (default): even though ss
     # is checkpointed, the over-cap branch and both self-join sides
-    # otherwise re-derive the explode+xxhash tree per consumer — A/B at
-    # 50k docs measured ~1 s slower end-to-end without the cache
+    # otherwise re-derive the explode per consumer — A/B at 50k docs
+    # measured ~1 s slower end-to-end without the cache
     cand = capped_candidate_pairs(
-        band_buckets(ss, bands, r), max_bucket, release=release
+        band_buckets(ss, bands, None), max_bucket, release=release
     )
-    # when the sig table carries the rep-group key (grp passthrough),
-    # ride it through the verify joins so rep pairs arrive with
-    # (grp_a, grp_b) attached — the member-level expansion then needs
-    # no rep-id -> group joins at all (two broadcast builds per
-    # consuming action in the r5 plan)
-    with_grp = "grp" in ss.columns
-    sa_cols = [F.col("id").alias("id_a"), F.col("s").alias("s_a")]
-    sb_cols = [F.col("id").alias("id_b"), F.col("s").alias("s_b")]
-    out_cols = ["id_a", "id_b", F.round("jaccard", 6).alias("jaccard")]
-    if with_grp:
-        sa_cols.append(F.col("grp").alias("grp_a"))
-        sb_cols.append(F.col("grp").alias("grp_b"))
-        out_cols += ["grp_a", "grp_b"]
+
+    def side(x: str) -> DataFrame:
+        return ss.select(
+            *[F.col(c).alias(f"{c}_{x}") for c in ("id", "s", "grp")]
+        )
+
     inter = F.size(F.array_intersect("s_a", "s_b"))
     return (
-        F.broadcast(cand).join(ss.select(*sa_cols), "id_a")
-        .join(ss.select(*sb_cols), "id_b")
+        F.broadcast(cand).join(side("a"), "id_a").join(side("b"), "id_b")
         .withColumn(
             "jaccard",
             inter / (F.size("s_a") + F.size("s_b") - inter),
         )
         .filter(F.col("jaccard") >= threshold)
-        .select(*out_cols)
-    )
-
-
-def _rep_groups(members: DataFrame) -> DataFrame:
-    """(grp, rid, csize) from a (grp, id) membership table — integers
-    only: min(id) is the same representative dup_groups elects, csize
-    the member count. Shared by the pair-expansion and edge-list paths
-    (one derivation; a semantics fix reaches every consumer)."""
-    return members.groupBy("grp").agg(
-        F.min("id").alias("rid"), F.count(F.lit(1)).alias("csize")
+        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"),
+                "grp_a", "grp_b")
     )
 
 
@@ -739,11 +709,10 @@ def _star_edges(members: DataFrame, elig_groups: DataFrame) -> DataFrame:
 
 def _expand_pairs(
     members: DataFrame,
-    rep_map: DataFrame,
     rep_pairs: DataFrame,
     value_col: str,
     intra_value,
-    elig: DataFrame,
+    elig: DataFrame | None,
 ) -> DataFrame:
     """Shared rep→member pair expansion (the join choreography behind
     both the MinHash and SimHash paths — one implementation so a fix in
@@ -752,26 +721,18 @@ def _expand_pairs(
     their rep, so rep-to-rep distance IS member-to-member distance);
     intra-group pairs get the exact-duplicate constant `intra_value`.
 
-    members: (grp, id) — every document and its exact-dup group key;
-    rep_map: (rid, rgrp) — representative id → group key, or None when
-             `rep_pairs` already carries (grp_a, grp_b) columns (the
-             construction attached them via the sig-table passthrough),
-             in which case the two rep-id -> group joins are skipped;
-    elig:    (grp) — groups eligible for intra pairs, or None when EVERY
-             group is eligible (the SimHash family: any same-fingerprint
-             group of size > 1 pairs, and singleton groups emit nothing
-             from a self-join anyway — skipping the eligibility join
-             saves a shuffle; MinHash keeps it for the shingle-
-             eligibility semantics)."""
-    if rep_map is None:
-        pairs_g = F.broadcast(rep_pairs.select("grp_a", "grp_b", value_col))
-    else:
-        pairs_g = (
-            F.broadcast(rep_pairs)
-            .join(rep_map.withColumnRenamed("rid", "id_a").withColumnRenamed("rgrp", "grp_a"), "id_a")
-            .join(rep_map.withColumnRenamed("rid", "id_b").withColumnRenamed("rgrp", "grp_b"), "id_b")
-            .select("grp_a", "grp_b", value_col)
-        )
+    members:   (grp, id) — every document and its exact-dup group key;
+    rep_pairs: (id_a, id_b, value_col, grp_a, grp_b) — the internal
+               rep-pair layout both families build and store;
+    elig:      (grp) — groups eligible for intra pairs, or None when
+               EVERY group is eligible (the SimHash family: any
+               same-fingerprint group of size > 1 pairs, and singleton
+               groups emit nothing from a self-join anyway — skipping
+               the eligibility join saves a shuffle; MinHash keeps it
+               for the shingle-eligibility semantics).
+
+    Output: exactly (id_a, id_b, value_col)."""
+    pairs_g = rep_pairs.select("grp_a", "grp_b", value_col)
     cross = (
         members.select(F.col("grp").alias("grp_a"), F.col("id").alias("ia"))
         .join(F.broadcast(pairs_g), "grp_a")
@@ -803,45 +764,23 @@ def _expand_pairs(
 
 
 def expand_rep_pairs(
-    docs: DataFrame, rep_pairs: DataFrame, elig_ids: DataFrame,
-    rg: DataFrame | None = None,
+    docs: DataFrame, rep_pairs: DataFrame, rg: DataFrame,
 ) -> DataFrame:
-    """Expand verified representative pairs to member pairs: cross-group
-    pairs inherit the representatives' jaccard (identical normalized text
-    => identical shingle set); intra-group pairs are exact duplicates
-    (jaccard 1.0).
+    """Expand verified representative pairs (verify_rep_pairs' layout)
+    to member pairs (id_a, id_b, jaccard): cross-group pairs inherit the
+    representatives' jaccard (identical normalized text => identical
+    shingle set); intra-group pairs are exact duplicates (jaccard 1.0).
 
-    Text is NEVER re-shuffled here: every frame derives from
-    docs.select(grp, id) — the md5 is recomputed map-side, but the
-    rep-id/group-size table comes from an integer groupBy over (grp, id),
-    not a second full-text reps aggregation (which an earlier revision
-    re-ran three times — the dominant shuffle of the expansion at any
-    scale). `elig_ids` is the (id) frame of representatives that produced
-    a shingle set (i.e. have a sig row — normalized text has >= k
-    tokens): docs without shingles have no jaccard to anything, matching
-    the exact oracle; callers pass the (tiny, checkpointed) id column of
-    the sig/set table rather than re-deriving the predicate from text.
-    `rg` is the optional pre-checkpointed (grp, rid, csize) rep-group
-    aggregate — when given (minhash_lsh_pairs passes the part-3 slice of
-    its fused checkpoint), the two consumers below read it from cache
-    instead of re-running the groupBy per action."""
-    members = docs.select("grp", "id")
-    if rg is None:
-        rg = _rep_groups(members)
-    # rep pairs carrying (grp_a, grp_b) — attached by verify_rep_pairs
-    # from the sig-table passthrough — skip the two rep-id -> group
-    # broadcast joins; stored pair chunks from the lineage path predate
-    # the passthrough and keep the join path
-    rep_map = (
-        None
-        if {"grp_a", "grp_b"}.issubset(rep_pairs.columns)
-        else rg.select("rid", F.col("grp").alias("rgrp"))
-    )
-    # intra eligibility: groups of size > 1 whose rep is shingle-eligible
-    elig = rg.filter(F.col("csize") > 1).join(
-        elig_ids.select(F.col(elig_ids.columns[0]).alias("rid")), "rid"
-    ).select("grp")
-    return _expand_pairs(members, rep_map, rep_pairs, "jaccard", 1.0, elig)
+    `rg` carries (grp, csize) with one row per shingle-eligible rep
+    group — a projection of the sig table, whose rows are exactly the
+    reps whose normalized text has >= k tokens. Groups without shingles
+    have no jaccard to anything (matching the exact oracle), so only
+    eligible groups of size > 1 emit intra pairs.
+
+    Text is never re-shuffled here: every frame is an integer projection
+    of docs' (grp, id) or of the sig table."""
+    elig = rg.filter(F.col("csize") > 1).select("grp")
+    return _expand_pairs(docs.select("grp", "id"), rep_pairs, "jaccard", 1.0, elig)
 
 
 # -- simhash -----------------------------------------------------------------
@@ -987,40 +926,39 @@ def simhash_pairs_from_fingerprints(
     candidate-bounded) rep-level pairs are computed and checkpointed,
     then released — no storage leak across repeated calls. The
     member-level expansion stays LAZY (it can be quadratic for giant dup
-    clusters — never eagerly materialized here) and reads its small
-    group frames from the fused checkpoint (see _simhash_rep_level); at
-    10^12-doc scale use expand_exact_dups=False (rep-level pairs + the
-    dup-groups table) as documented on minhash_lsh_pairs."""
-    sh, rep_pairs, rg = _simhash_rep_level(
-        sh, max_hamming, n_blocks, max_bucket,
-        with_groups=expand_exact_dups,
+    clusters — never eagerly materialized here) and reads only the
+    fingerprint checkpoint and the checkpointed rep pairs, which carry
+    both fingerprints as their group keys; at 10^12-doc scale use
+    expand_exact_dups=False (rep-level pairs + the dup-groups table) as
+    documented on minhash_lsh_pairs. Output columns are exactly
+    (id_a, id_b, hamming) in both modes."""
+    sh, rep_pairs, _ = _simhash_rep_level(
+        sh, max_hamming, n_blocks, max_bucket, with_groups=False,
     )
     if not expand_exact_dups:
-        return rep_pairs
-    return expand_simhash_rep_pairs(sh, rep_pairs, rg=rg)
+        return rep_pairs.select("id_a", "id_b", "hamming")
+    return expand_simhash_rep_pairs(sh, rep_pairs)
 
 
 def _simhash_rep_level(
     sh: DataFrame, max_hamming: int, n_blocks: int | None,
     max_bucket: int | None, *, with_groups: bool,
 ):
-    """Blocking + verify shared by simhash_pairs_from_fingerprints and
-    simhash_edges_from_fingerprints. Returns (checkpointed sh,
-    rep_pairs, rg) where rg is the (grp, rid, csize) rep-group aggregate
-    when with_groups (else None) — fused into the SAME localCheckpoint
-    as rep_pairs (part-tagged union, the minhash _minhash_rep_level
-    pattern): every expansion/eligibility consumer reads the groupBy
-    result from cache instead of re-shuffling the fingerprint table per
-    plan branch (rep_map is joined twice in _expand_pairs alone)."""
+    """Blocking + verify shared by simhash_pairs_from_fingerprints,
+    simhash_edges_from_fingerprints and the staged
+    lineage.CheckpointedSimhashDedup. Returns (checkpointed sh,
+    rep_pairs, rg): rep_pairs is the checkpointed internal layout
+    (id_a, id_b, hamming, grp_a, grp_b) — the group keys are the
+    fingerprints — and rg the (grp, rid, csize) rep-group aggregate the
+    edge list's star branch needs, fused into the SAME localCheckpoint
+    as rep_pairs when with_groups (else None)."""
     # materialize the fingerprint table ONCE (localCheckpoint — linear,
-    # ~16 B/doc, nothing like the quadratic member-pair list): the plan
-    # branches (buckets, rep->group aggregate, member expansion) all
-    # read it without ever re-running the simhash kernel pass; the
-    # checkpoint blocks are freed when the returned frame is
-    # garbage-collected. With adaptive width the checkpoint is LAZY and
-    # the count() both materializes it and returns the size — ONE job
-    # where the r4 shape paid an eager checkpoint plus a separate
-    # cache-scan count.
+    # ~16 B/doc, nothing like the quadratic member-pair list): every plan
+    # branch (buckets, rep-group aggregate, member expansion) reads it
+    # without re-running the simhash kernel; its blocks are freed when
+    # the returned frame is garbage-collected. With adaptive width the
+    # checkpoint is LAZY and the one count() both materializes it and
+    # returns the size.
     if not (sh.storageLevel.useMemory or sh.storageLevel.useDisk):
         sh = sh.localCheckpoint(eager=n_blocks is not None)
     if n_blocks is None:
@@ -1030,9 +968,9 @@ def _simhash_rep_level(
     # one representative per distinct fingerprint; the 8-byte fingerprint
     # RIDES the bucket rows (payload_col) so the verify needs NO joins at
     # all — each candidate pair arrives with both fingerprints attached
-    # (bands * 8 extra shuffle bytes vs the broadcast + two join stages
-    # the r4 plan paid), and the candidate dedup runs AFTER the
-    # bit_count filter, shuffling only surviving pairs
+    # (bands * 8 extra shuffle bytes instead of a broadcast + two join
+    # stages), and the candidate dedup runs AFTER the bit_count filter,
+    # shuffling only surviving pairs
     groups = sh.groupBy("simhash").agg(
         F.min("id").alias("id"), F.count(F.lit(1)).alias("csize")
     )
@@ -1058,10 +996,8 @@ def _simhash_rep_level(
             F.bit_count(
                 F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
             ).alias("hamming"),
-            # the fingerprints ARE the group keys — keeping them on the
-            # verified pair removes the expansion's rep-id -> group
-            # joins (they are functions of the ids, so the dedup keeps
-            # a consistent value)
+            # the fingerprints ARE the group keys (functions of the
+            # ids, so the dedup keeps a consistent value)
             F.col("simhash_a").alias("grp_a"),
             F.col("simhash_b").alias("grp_b"),
         )
@@ -1078,8 +1014,7 @@ def _simhash_rep_level(
                 # the rep-group aggregate IS `groups` (min(id) = rid,
                 # count = csize, keyed by the fingerprint): reusing the
                 # same frame lets ReuseExchange serve this branch and
-                # the bucket branch from ONE groupBy(simhash) shuffle —
-                # the r5 shape re-aggregated mem from scratch here
+                # the bucket branch from ONE groupBy(simhash) shuffle
                 groups.select(
                     F.lit(1).alias("part"),
                     F.col("simhash").alias("grp"),
@@ -1131,32 +1066,18 @@ def simhash_edges_from_fingerprints(
     )
 
 
-def expand_simhash_rep_pairs(
-    sh: DataFrame, rep_pairs: DataFrame, rg: DataFrame | None = None,
-) -> DataFrame:
-    """Expand rep-level SimHash pairs to member pairs from a fingerprint
-    table (id, simhash): cross-group pairs inherit the representatives'
+def expand_simhash_rep_pairs(sh: DataFrame, rep_pairs: DataFrame) -> DataFrame:
+    """Expand rep-level SimHash pairs (_simhash_rep_level's layout) to
+    member pairs (id_a, id_b, hamming) from a fingerprint table
+    (id, simhash): cross-group pairs inherit the representatives'
     hamming (equal simhash => equal distance to everything); intra-group
     pairs are hamming 0. Integer shuffles only; shared by the batch path
     and the checkpointed pipeline's resume leg (which reads `sh` and
-    `rep_pairs` straight from stored chunks). Join choreography lives in
-    _expand_pairs (one implementation for both dedup families). `rg` is
-    the optional pre-checkpointed (grp, rid, csize) rep-group aggregate
-    (_simhash_rep_level passes its fused-checkpoint slice); when absent
-    — the lineage resume leg, which has only stored chunks — it is
-    derived here once per consuming action."""
+    `rep_pairs` straight from stored chunks)."""
     members = sh.select(F.col("simhash").alias("grp"), "id")
-    # rep pairs carrying (grp_a, grp_b) — the fingerprints attached at
-    # verify time — skip the rep-id -> group joins; lineage-stored pair
-    # chunks predate the columns and keep the join path
-    if {"grp_a", "grp_b"}.issubset(rep_pairs.columns):
-        rep_map = None
-    else:
-        rg = _rep_groups(members) if rg is None else rg
-        rep_map = rg.select("rid", F.col("grp").alias("rgrp"))
     # elig=None: every same-fingerprint group is intra-eligible (see
     # _expand_pairs) — singleton groups emit nothing from the self-join
-    return _expand_pairs(members, rep_map, rep_pairs, "hamming", 0, None)
+    return _expand_pairs(members, rep_pairs, "hamming", 0, None)
 
 
 # -- snapshot collapse --------------------------------------------------------

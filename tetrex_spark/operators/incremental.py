@@ -62,7 +62,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernel.bloom import BloomFilter, bloom_m_bits
-from .dedup import norm_col
+from .dedup import band_buckets, dup_groups, minhash_sig_table, norm_col
 
 LAYOUT_VERSION = 1
 NORM_VERSION = 1  # the norm_col / normalize_series convention
@@ -91,6 +91,41 @@ def _hashed(df: DataFrame, n_buckets: int, text_col: str, id_col: str) -> DataFr
     )
 
 
+def _drop_checkpoint(df: DataFrame) -> None:
+    """Free a localCheckpoint's blocks now rather than when the frame is
+    garbage-collected (its plan is a LogicalRDD over the persisted RDD).
+    Only for frames no returned plan reads."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _write_concurrently(sc, *writes) -> None:
+    """Run independent index writes as concurrent Spark jobs: the second
+    write's tasks back-fill executors freed by the first's tail instead
+    of waiting for it. When one write fails, the jobs its siblings are
+    running are cancelled (every write tags its jobs) and the first
+    error re-raises once every write has stopped."""
+    import uuid
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+
+    tag = f"tetrex-index-write-{uuid.uuid4().hex}"
+
+    def run(write) -> None:
+        sc.addJobTag(tag)
+        try:
+            write()
+        finally:
+            sc.removeJobTag(tag)
+
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futs = [pool.submit(run, w) for w in writes]
+        done, _ = wait(futs, return_when=FIRST_EXCEPTION)
+        err = next((f.exception() for f in done if f.exception()), None)
+        if err is not None:
+            sc.cancelJobsWithTag(tag)
+    if err is not None:
+        raise err
+
+
 def build_membership_index(
     df: DataFrame,
     out_dir: str,
@@ -109,9 +144,7 @@ def build_membership_index(
     # bucket dir is one file, not one-per-upstream-task — the rows are
     # 16 B, the extra shuffle is cheap; the gate's pruned confirm reads
     # open few). The hashes write, the Bloom build and the stats all
-    # read this checkpoint — the r5 shape wrote the parquet, then READ
-    # IT BACK for the Bloom pass, then read the blooms parquet back
-    # again for stats (three extra scans' worth of jobs per freeze).
+    # read this checkpoint; nothing re-reads the files just written.
     hashes = (
         _hashed(df, n_buckets, text_col, id_col)
         .select("bucket", "h", "h2")
@@ -135,28 +168,22 @@ def build_membership_index(
         )
 
     blooms = hashes.groupBy("bucket").applyInPandas(build, _BLOOM_SCHEMA).persist()
-
-    # the two index writes are independent readers of the checkpoint /
-    # the persisted bloom rows — run them as concurrent jobs (§2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _write_hashes() -> None:
-        hashes.write.mode("overwrite").partitionBy("bucket").parquet(
-            f"{out_dir}/hashes"
+    # the checkpoint and the persisted bloom rows are released on every
+    # exit, a failed write included
+    try:
+        _write_concurrently(
+            df.sparkSession.sparkContext,
+            lambda: hashes.write.mode("overwrite").partitionBy("bucket")
+            .parquet(f"{out_dir}/hashes"),
+            lambda: blooms.write.mode("overwrite").parquet(f"{out_dir}/blooms"),
         )
-
-    def _write_blooms() -> None:
-        blooms.write.mode("overwrite").parquet(f"{out_dir}/blooms")
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for fut in [pool.submit(_write_hashes), pool.submit(_write_blooms)]:
-            fut.result()
-
-    stats = blooms.agg(
-        F.sum("n_keys").alias("n_keys"),
-        F.count(F.lit(1)).alias("n_filled_buckets"),
-    ).collect()[0]
-    blooms.unpersist()
+        stats = blooms.agg(
+            F.sum("n_keys").alias("n_keys"),
+            F.count(F.lit(1)).alias("n_filled_buckets"),
+        ).collect()[0]
+    finally:
+        blooms.unpersist()
+        _drop_checkpoint(hashes)
     params = {
         "_layout": LAYOUT_VERSION,
         "kind": "membership",
@@ -335,87 +362,53 @@ def build_neardup_index(
     recorded in params (same trade, and the same visibility, as the
     batch capped_candidate_pairs). num_perm/bands (default 32x4) give
     recall ~1-5e-8 at jaccard >= 0.8."""
-    from .dedup import band_buckets, minhash_sigs_and_sets
-
-    if num_perm % bands:
-        raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
-    r = num_perm // bands
-    reps = (
-        df.select(F.col(id_col).alias("__rid"), F.col(text_col))
-        .groupBy(F.md5(norm_col(text_col)).alias("__dk"))
-        .agg(
-            F.min("__rid").alias(id_col),
-            F.any_value(text_col).alias(text_col),
-        )
-        .drop("__dk")
+    # ONE kernel pass over the exact-dup representatives: the buckets
+    # write (and its over-cap anti-join branch), the sets write and the
+    # counts all read this checkpoint
+    _, reps = dup_groups(df, text_col, id_col)
+    ss = minhash_sig_table(reps, k, num_perm, bands, "txt", "id").localCheckpoint(
+        eager=True
     )
-    from .dedup import band_hashes_col
-
-    ss = (
-        minhash_sigs_and_sets(
-            reps, k, num_perm, text_col=text_col, id_col=id_col
+    over = None
+    try:
+        n_reps = ss.count()
+        if n_shards is None:
+            # scale-adaptive sharding: ~100k representatives per shard
+            # (sets dominate at ~1-2 KB/rep -> shard files land in the
+            # 100-300 MB range), so a toy corpus does not pay many-tiny-
+            # file overhead on every pruned gate read and a 10^9-rep
+            # corpus still gets real pruning granularity. Recorded in
+            # params, so gates never depend on the default.
+            n_shards = max(4, min(4096, -(-n_reps // 100_000)))
+        buckets = band_buckets(ss, bands, None)
+        if max_bucket:
+            # persisted: the anti-join AND the n_dropped stat read the
+            # (tiny, <= n*bands/max_bucket rows) over-cap list
+            over = (
+                buckets.groupBy("band", "bh").count()
+                .filter(F.col("count") > max_bucket).persist()
+            )
+            buckets = buckets.join(
+                over.select("band", "bh"), ["band", "bh"], "left_anti"
+            )
+        # repartition ON the partition column before each partitioned
+        # write, so every shard is one file (not tasks x shards tiny
+        # files) and the gate's pruned reads open few
+        _write_concurrently(
+            df.sparkSession.sparkContext,
+            lambda: buckets.withColumn("shard", _sshard(F.col("bh"), n_shards))
+            .repartition(F.col("shard")).write.mode("overwrite")
+            .partitionBy("shard").parquet(f"{out_dir}/buckets"),
+            lambda: ss.select(
+                _sshard(F.col("id"), n_shards).alias("sshard"), "id", "s"
+            ).repartition(F.col("sshard")).write.mode("overwrite")
+            .partitionBy("sshard").parquet(f"{out_dir}/sets"),
         )
-        .select("id", "s", band_hashes_col(bands, r).alias("bhs"))
-        .localCheckpoint(eager=True)
-    )  # ONE kernel pass: the buckets write (and its over-cap anti-join
-    # branch), the sets write, and the over.count() all read this, and
-    # each would re-run the Arrow sign+set pass otherwise; the
-    # checkpoint stores the band keys, not the 4x-larger signature
-    n_reps = ss.count()  # cache read; reused for the params stat below
-    if n_shards is None:
-        # scale-adaptive sharding (n_shards=None, the default): target
-        # ~100k representatives per shard (sets dominate at ~1-2 KB/rep
-        # -> shard files land in the 100-300 MB range the I/O guide
-        # recommends) instead of a constant 64 — a toy corpus stops
-        # paying 64-tiny-file open/list overhead on every pruned gate
-        # read, and a 10^9-rep corpus gets real pruning granularity
-        # rather than 64 multi-GB shards. Recorded in params, so gates
-        # never depend on the default.
-        n_shards = max(4, min(4096, -(-n_reps // 100_000)))
-    buckets = band_buckets(ss, bands, r)
-    counts = buckets.groupBy("band", "bh").count()
-    # persist the (tiny, <= n*bands/max_bucket rows) over-cap list: the
-    # anti-join below AND the n_dropped stat both read it — without the
-    # persist the stat re-shuffled the whole bucket table a second time
-    over = (
-        counts.filter(F.col("count") > max_bucket).persist()
-        if max_bucket else None
-    )
-    if over is not None:
-        buckets = buckets.join(over.select("band", "bh"), ["band", "bh"], "left_anti")
-    # repartition ON the partition column before the partitioned write:
-    # otherwise every task writes into every shard dir (tasks x shards
-    # tiny files — measured 3.5k files for a 5k-doc corpus); this way
-    # each shard is one file and the gate's pruned reads open few.
-    # The two index writes are INDEPENDENT readers of the checkpointed
-    # sig/set table, so they run as concurrent jobs (guide §2.6): the
-    # second write's tasks back-fill executors freed by the first's
-    # tail instead of waiting for it.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _write_buckets() -> None:
-        buckets.withColumn(
-            "shard", _sshard(F.col("bh"), n_shards)
-        ).repartition(F.col("shard")).write.mode("overwrite").partitionBy(
-            "shard"
-        ).parquet(f"{out_dir}/buckets")
-
-    def _write_sets() -> None:
-        ss.select(
-            _sshard(F.col("id"), n_shards).alias("sshard"), "id", "s"
-        ).repartition(F.col("sshard")).write.mode("overwrite").partitionBy(
-            "sshard"
-        ).parquet(f"{out_dir}/sets")
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for fut in [pool.submit(_write_buckets), pool.submit(_write_sets)]:
-            fut.result()
-
-    # n_reps already counted from the checkpoint above (sets rows are
-    # 1:1 with it — no re-read of the parquet just written)
-    n_dropped = int(over.count()) if over is not None else 0
-    if over is not None:
-        over.unpersist()
+        n_dropped = int(over.count()) if over is not None else 0
+    finally:
+        if over is not None:
+            over.unpersist()
+        _drop_checkpoint(ss)
     params = {
         "_layout": LAYOUT_VERSION,
         "kind": "neardup",
@@ -449,28 +442,18 @@ def incremental_neardup_pairs(
     pairs are exact-verified against the stored sets, read pruned the
     same way. Only the bounded shard-id lists (≤ n_shards, a config)
     ever reach the driver."""
-    from .dedup import band_buckets, minhash_sigs_and_sets
-
     spark = increment.sparkSession
     params = _read_params(index_dir, kind="neardup")
-    bands, r = int(params["bands"]), int(params["num_perm"]) // int(params["bands"])
+    bands = int(params["bands"])
     n_shards, threshold = int(params["n_shards"]), float(params["threshold"])
-
-    from .dedup import band_hashes_col
-
-    inc_ss = (
-        minhash_sigs_and_sets(
-            increment, int(params["k"]), int(params["num_perm"]),
-            text_col=text_col, id_col=id_col,
-        )
-        .select("id", "s", band_hashes_col(bands, r).alias("bhs"))
-        .localCheckpoint(eager=True)
-    )  # one kernel pass; blocking + verify reuse (band keys stored,
-    # not the 4x-larger signature)
-    inc_b = band_buckets(inc_ss, bands, r).withColumn(
+    # one kernel pass; blocking and verify both read the checkpoint
+    inc_ss = minhash_sig_table(
+        increment, int(params["k"]), int(params["num_perm"]), bands,
+        text_col, id_col,
+    ).localCheckpoint(eager=True)
+    inc_b = band_buckets(inc_ss, bands, None).withColumn(
         "shard", _sshard(F.col("bh"), n_shards)
     )
-
     shards = [int(x["shard"]) for x in inc_b.select("shard").distinct().collect()]
     if not shards:
         return spark.createDataFrame(
