@@ -407,6 +407,22 @@ def test_blocked_cosine_pairs_never_broadcasts_packed_table(vectors):
     assert "ShuffledHashJoin" in plan or "SortMergeJoin" in plan, plan
 
 
+def test_blocked_cosine_reads_input_once(spark, tmp_path, vectors):
+    """cosine_pairs_blocked scans its input in ONE pass: the block count
+    and both block-pair join sides read one materialized copy, so the
+    pair plan never reads the source again."""
+    from tetrex_spark.operators.similarity import cosine_pairs_blocked
+
+    df, _ = vectors
+    path = str(tmp_path / "vectors")
+    df.write.parquet(path)
+    stored = spark.read.parquet(path)
+    for block in (16, 1000):  # block-pair join and single-block path
+        plan = cosine_pairs_blocked(stored, 0.4, block=block)._jdf.queryExecution(
+        ).executedPlan().toString()
+        assert "FileScan" not in plan and "Scan parquet" not in plan, plan
+
+
 def test_cosine_verify_pairs_matches_exact(vectors):
     """Packed-BLAS candidate scoring (the hyperplane verify path) returns
     exactly the broadcast-exact cosines for the same pair list."""

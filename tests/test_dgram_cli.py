@@ -104,6 +104,79 @@ def test_gap0_tracked_min_gap_zero(spark, tmp_path):
     )
 
 
+def _assert_same_index(got, loaded):
+    """Same manifest, alphabet, char Bloom matrix and d-gram matrices."""
+    assert got.manifest == loaded.manifest
+    assert (got.k, got.alphabet) == (loaded.k, loaded.alphabet)
+
+    def matrix(bm):
+        return bm.n_bins, bm.m_bits, bm.n_hashes, bm.matrix.tobytes()
+
+    assert matrix(got.bloom) == matrix(loaded.bloom)
+    if loaded.dgram is None:
+        assert got.dgram is None
+        return
+    assert (got.dgram.min_gap, got.dgram.max_gap, got.dgram.seed) == (
+        loaded.dgram.min_gap, loaded.dgram.max_gap, loaded.dgram.seed)
+    assert sorted(got.dgram.matrices) == sorted(loaded.dgram.matrices)
+    for gap, bm in loaded.dgram.matrices.items():
+        assert matrix(got.dgram.matrices[gap]) == matrix(bm), gap
+
+
+@pytest.mark.parametrize("mode", ["plain", "salted", "prebinned"])
+def test_built_and_tracked_index_equal_loaded(spark, tmp_path, mode):
+    """build() and track() return the index they wrote without reading it
+    back: it equals MotifIndex.load of the same directory, and both Bloom
+    families are sized by the JVM sizing bound (k=4 keeps the char-kgram
+    and PAD-gram bounds apart)."""
+    from tetrex_spark.kernel.bloom import bloom_m_bits
+    from tetrex_spark.operators.sketch_build import max_bin_cardinality
+    from tetrex_spark.plans.dgram import PAD
+    from tetrex_spark.sources.corpus import with_bin_id
+
+    corpus = webtext_small(spark)
+    kw = {}
+    if mode == "salted":
+        kw = {"salt_hot_hosts": "auto", "hot_factor": 2.0}
+    elif mode == "prebinned":
+        corpus = with_bin_id(corpus, 16)
+    path = str(tmp_path / mode)
+    built = MotifIndex.build(corpus, path, n_bins=16, k=4, **kw)
+    assert bool(built.manifest["salted_hosts"]) == (mode == "salted")
+    _assert_same_index(built, MotifIndex.load(spark, path))
+    tracked = built.track(corpus, path, min_gap=1, max_gap=3, fpr=0.1)
+    assert tracked.bloom is built.bloom
+    _assert_same_index(tracked, MotifIndex.load(spark, path))
+
+    binned = built._binned(corpus, 16)
+    assert built.bloom.m_bits == bloom_m_bits(
+        max_bin_cardinality(binned, "char_kgram", 4), 0.05)
+    assert {bm.m_bits for bm in tracked.dgram.matrices.values()} == {
+        bloom_m_bits(max_bin_cardinality(binned, "char_kgram", PAD), 0.1)}
+
+
+def test_track_refuses_index_without_pad_gram_bound(spark, tmp_path):
+    """An index whose manifest predates the recorded PAD-gram bound must
+    be rebuilt: track() raises instead of sizing the d-grams itself, and
+    appends nothing."""
+    import json
+
+    from tetrex_spark.sources.corpus import motif_mini
+
+    corpus = motif_mini(spark)
+    path = str(tmp_path / "idx_old")
+    MotifIndex.build(corpus, path, n_bins=2, k=3)
+    with open(f"{path}/manifest.json") as f:
+        manifest = json.load(f)
+    del manifest["max_bin_pad_grams"]
+    with open(f"{path}/manifest.json", "w") as f:
+        json.dump(manifest, f)
+    old = MotifIndex.load(spark, path)
+    with pytest.raises(ValueError, match="rebuild"):
+        old.track(corpus, path, min_gap=1, max_gap=2)
+    assert MotifIndex.load(spark, path).dgram is None
+
+
 # -- CLI ---------------------------------------------------------------------
 
 
@@ -300,3 +373,28 @@ def test_cli_embdedup_keep_list(spark, tmp_path):
     assert main(["embdedup", "--corpus", emb_path, "--output", out_dir,
                  "--threshold", "0.9", "--chunks", "4"]) == 0
     assert sum(1 for _ in open(lineage_path)) == n_commits
+
+
+def test_cli_track_without_motif_index_sizes_itself(spark, tmp_path, capsys):
+    """CLI `track` into a directory with no motif manifest builds a
+    stand-alone d-gram index and sizes it with its own aggregate."""
+    from tetrex_spark.cli import main
+    from tetrex_spark.kernel.bloom import bloom_m_bits
+    from tetrex_spark.operators.sketch_build import max_bin_cardinality
+    from tetrex_spark.plans.dgram import PAD
+    from tetrex_spark.sources.corpus import with_bin_id
+    from tetrex_spark.sources.sketch_store import read_manifest
+
+    corpus = webtext_small(spark)
+    corpus_path = str(tmp_path / "corpus")
+    corpus.write.parquet(corpus_path)
+    out = str(tmp_path / "dg_only")
+    rc = main(["track", "--corpus", corpus_path, "--output", out,
+               "--bins", "4", "--min-gap", "1", "--max-gap", "2"])
+    assert rc == 0
+    assert "across 4 bins" in capsys.readouterr().out
+    cfg = read_manifest(out)["dgram"]
+    assert (cfg["min_gap"], cfg["max_gap"]) == (1, 2)
+    stored = spark.read.parquet(corpus_path)
+    assert cfg["m_bits"] == bloom_m_bits(
+        max_bin_cardinality(with_bin_id(stored, 4), "char_kgram", PAD), 0.05)

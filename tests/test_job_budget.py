@@ -1,6 +1,6 @@
-"""Eager-job budgets for the LSH dedup family (round-4 verdict item 2:
-the fixed per-call job count is the toy-scale cost driver — count it,
-budget it, and fail on regression).
+"""Eager-job budgets for the LSH dedup family and the motif index
+build/track (the fixed per-call job count dominates toy-scale cost —
+count it, budget it, and fail on regression).
 
 Spark jobs are counted per job group via the status tracker. With AQE on
 every materialized exchange is its own job, so the counts are
@@ -85,3 +85,37 @@ def test_minhash_lsh_edges_job_budget(spark, corpus):
     assert "FileScan" not in plan and "Scan parquet" not in plan
     _, n_count = _jobs(spark, "mhe-count", lambda: df.count())
     assert n_count <= 6, f"minhash edges count ran {n_count} jobs"
+
+
+@pytest.fixture(scope="module")
+def web(spark):
+    from tetrex_spark.sources.corpus import webtext_small
+
+    return webtext_small(spark).cache()
+
+
+def test_motif_index_build_job_budget(spark, web, tmp_path):
+    """Hot-host detection + ONE sizing aggregate + ONE kernel pass whose
+    persisted output is collected and written once (no read-back)."""
+    from tetrex_spark.plans.planner import MotifIndex
+
+    web.count()
+    _, n_build = _jobs(spark, "motif-build", lambda: MotifIndex.build(
+        web, str(tmp_path / "idx"), n_bins=16, k=3,
+        salt_hot_hosts="auto", hot_factor=2.0))
+    # 11 at 4 cores
+    assert n_build <= 14, f"motif index build ran {n_build} jobs"
+
+
+def test_motif_track_job_budget(spark, web, tmp_path):
+    """No sizing aggregate (the bound is in the manifest) + ONE kernel
+    pass over every gap, appended from its persisted output."""
+    from tetrex_spark.plans.planner import MotifIndex
+
+    path = str(tmp_path / "idx")
+    idx = MotifIndex.build(web, path, n_bins=16, k=3,
+                           salt_hot_hosts="auto", hot_factor=2.0)
+    _, n_track = _jobs(spark, "motif-track", lambda: idx.track(
+        web, path, min_gap=1, max_gap=3))
+    # 4 at 4 cores
+    assert n_track <= 7, f"motif track ran {n_track} jobs"

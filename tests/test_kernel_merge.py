@@ -9,7 +9,15 @@ keep every tested quantile within the published rank-error bound.
 import numpy as np
 import pytest
 
-from tetrex_spark.kernel import KLL, BloomFilter, CountMinSketch, HyperLogLog, TDigest
+from tetrex_spark.kernel import (
+    KLL,
+    BloomFilter,
+    CharSet,
+    CountMinSketch,
+    HyperLogLog,
+    TDigest,
+    from_bytes,
+)
 from tetrex_spark.kernel.hashing import splitmix64
 
 N_CHUNKS = 16
@@ -71,6 +79,29 @@ def test_lattice_sketches_byte_identical_any_merge_order(factory, key_chunks):
             assert body == reference, f"payload differs under permutation seed {seed}"
 
 
+def test_charset_byte_identical_any_batching_and_merge_order():
+    """The alphabet sketch is exact: whatever the update batching, payload
+    round trips and merge tree, the payload is the same bytes and the set
+    is exactly the text's characters."""
+    rng = np.random.default_rng(7)
+    pool = list("abcdefghij ,.-") + ["\u00e9", "\u00df", "\u4e2d", "\U0001f600", "\u01c5"]
+    text = "".join(rng.choice(pool, size=20_000))
+    cps = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
+    reference = CharSet().update(cps).to_bytes()
+    assert from_bytes(reference).chars() == "".join(sorted(set(text)))
+    for seed in range(N_PERMS):
+        rng = np.random.default_rng(seed)
+        cuts = np.sort(rng.choice(cps.size, size=N_CHUNKS - 1, replace=False))
+        partials = []
+        for chunk in np.split(cps, cuts):
+            sk = CharSet()
+            for part in np.array_split(chunk, int(rng.integers(1, 4))):
+                sk.update(part.astype(np.uint64))
+            partials.append(from_bytes(sk.to_bytes()))
+        merged = _merge_tree(partials, rng.permutation(N_CHUNKS), rng)
+        assert merged.to_bytes() == reference, f"payload differs under seed {seed}"
+
+
 @pytest.mark.parametrize("q", [0.05, 0.25, 0.5, 0.75, 0.95])
 def test_kll_bound_holds_under_any_merge_order(value_chunks, q):
     all_vals = np.sort(np.concatenate(value_chunks))
@@ -105,3 +136,5 @@ def test_merge_rejects_mismatched_params():
         BloomFilter(1 << 10).merge(BloomFilter(1 << 11))
     with pytest.raises(ValueError):
         HyperLogLog(p=10).merge(HyperLogLog(p=12))
+    with pytest.raises(ValueError):
+        CharSet().merge(BloomFilter(1 << 10))

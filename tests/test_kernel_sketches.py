@@ -7,6 +7,7 @@ import pytest
 from tetrex_spark.kernel import (
     KLL,
     BloomFilter,
+    CharSet,
     CountMinSketch,
     HyperLogLog,
     TDigest,
@@ -72,6 +73,23 @@ def test_bloom_roundtrip(ints_1e5):
     bf2 = from_bytes(bf.to_bytes())
     assert np.array_equal(bf.bits, bf2.bits)
     assert bf2.contains(ints_1e5[:1000]).all()
+
+
+# ---------------------------------------------------------------- charset
+
+
+def test_charset_roundtrip_and_rejects_non_code_points():
+    cs = CharSet().update(np.array([104, 105, 0x1F600, 104], dtype=np.uint32))
+    assert cs.chars() == "hi\U0001f600" and cs.estimate() == 3.0
+    assert cs.contains(np.array([105, 106])).tolist() == [True, False]
+    assert from_bytes(cs.to_bytes()).to_bytes() == cs.to_bytes()
+    assert CharSet().update(np.zeros(0, dtype=np.uint64)).chars() == ""
+    with pytest.raises(ValueError, match="code points"):
+        CharSet().update(np.array([0x110000], dtype=np.uint64))
+    with pytest.raises(ValueError, match="code points"):
+        CharSet().update(np.array([-1], dtype=np.int64))
+    with pytest.raises(ValueError, match="code-point set"):
+        from_bytes(CharSet(codes=np.array([5, 3], dtype=np.uint32)).to_bytes())
 
 
 # ---------------------------------------------------------------- hll

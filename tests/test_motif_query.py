@@ -167,21 +167,17 @@ def test_salted_build_identical_hits_and_spread(spark, tmp_path, webtext):
         assert spark_hits(idx2.query(corpus, pattern)) == oracle_hits(pdf, pattern)
 
 
-def test_fused_sizing_alphabet_matches_two_pass(spark):
-    """alphabet_and_sizing (one scan) == the two old pre-passes: same
-    Bloom sizing bound, and an alphabet covering every char the indexed
-    (extracted, normalized) text can contain."""
-    from tetrex_spark.operators.sketch_build import max_bin_cardinality
-    from tetrex_spark.plans.planner import alphabet_and_sizing
-    from tetrex_spark.sources.corpus import with_bin_id
-
-    corpus = webtext_small(spark)
-    binned = with_bin_id(corpus, 16)
-    n_max, alpha = alphabet_and_sizing(binned, 3)
-    assert n_max == max_bin_cardinality(binned, "char_kgram", 3)
-    pdf = corpus.toPandas()
-    norm = corpus_text_series(pdf["text"], pdf["html"])
-    assert set("".join(norm)) <= set(alpha)
+def test_manifest_alphabet_is_exactly_the_indexed_chars(webtext):
+    """The manifest alphabet comes from the build's own kernel pass: it is
+    exactly the set of characters of the extracted, normalized text the
+    Bloom indexed — html-only docs included — so dot-expansion ranges
+    over a sound closed alphabet with no spurious probes."""
+    corpus, idx, pdf = webtext
+    want = set("".join(corpus_text_series(pdf["text"], pdf["html"])))
+    assert idx.manifest["alphabet"] == "".join(sorted(want))
+    assert idx.alphabet == idx.manifest["alphabet"]
+    html_only = set("".join(pdf[pdf["text"].isna()]["norm"]))
+    assert html_only and html_only <= set(idx.alphabet)
 
 
 def test_query_many_equals_sequential(webtext):
@@ -281,3 +277,21 @@ def test_bin_filter_and_projection_reach_parquet_scan(spark, tmp_path, webtext):
     assert read_cols == {"url", "text", "bin_id"}, read_cols
     # and the full-scan fallback (every bin a candidate) skips the filter
     assert prune_to_bins(stored, list(range(16)), 16) is stored
+
+
+def test_grouped_pattern_prefilter_emits_no_warning():
+    """A pattern with a group (e.g. 'qu(e|a)ry') must not make the verify
+    prefilter emit pandas' match-groups UserWarning once per Arrow batch;
+    the matches are unchanged."""
+    import warnings
+
+    import pandas as pd
+
+    from tetrex_spark.operators.verify import _verify_batches
+
+    batch = pd.DataFrame({"url": ["u1", "u2"], "text": ["A Quary here", "nothing"]})
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = pd.concat(list(_verify_batches("qu(e|a)ry", "url", False)(iter([batch]))))
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
+    assert out.values.tolist() == [["u1", "quary", 2, 7]]

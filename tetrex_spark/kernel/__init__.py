@@ -1,7 +1,8 @@
 """Pure-numpy mergeable sketch kernels (zero Spark imports).
 
 The UDAF family required by the north rule (BASELINE.json):
-bloom / hll / cms / kll / tdigest, each with
+bloom / hll / cms / kll / tdigest (+ the exact charset behind the motif
+index alphabet), each with
 update(ndarray) / merge(other) / estimate() / to_bytes() / from_bytes().
 """
 
@@ -11,6 +12,7 @@ import numpy as np
 
 from .base import Sketch, from_bytes, pack_payload, unpack_payload
 from .bloom import BloomFilter, bloom_m_bits
+from .charset import CharSet
 from .cms import CountMinSketch
 from .hll import HyperLogLog
 from .kll import KLL
@@ -25,6 +27,7 @@ REGISTRY: dict[str, type] = {
     CountMinSketch.KIND: CountMinSketch,
     KLL.KIND: KLL,
     TDigest.KIND: TDigest,
+    CharSet.KIND: CharSet,
 }
 
 __all__ = [
@@ -34,6 +37,7 @@ __all__ = [
     "CountMinSketch",
     "KLL",
     "TDigest",
+    "CharSet",
     "REGISTRY",
     "from_bytes",
     "pack_payload",

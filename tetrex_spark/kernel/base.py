@@ -11,9 +11,9 @@ build pipeline (operators/sketch_build.py) is kernel-agnostic:
     s.to_bytes() / from_bytes # deterministic serialization (parquet binary)
     s.estimate(...)           # kind-specific query
 
-Determinism rule: for Bloom/HLL/CMS the payload must be *byte-identical*
-regardless of update batching and merge order (pure OR / max / add
-lattices). KLL and t-digest are sampling sketches — payloads may differ
+Determinism rule: for Bloom/HLL/CMS/charset the payload must be *byte-identical*
+regardless of update batching and merge order (pure OR / max / add /
+union lattices). KLL and t-digest are sampling sketches — payloads may differ
 across merge orders, but every estimate must stay within the published
 error bound (property-tested in tests/test_kernel_merge.py).
 """

@@ -424,10 +424,11 @@ def cosine_pairs_blocked(
     one matmul per task."""
     import math
 
-    # NOT checkpointed here (unlike hyperplane_lsh_pairs, whose input is
-    # consumed three times): the sizing count and the packing pass are
-    # the only two consumers, and an A/B showed the materialization
-    # costs more than the second scan it saves on this path
+    # ONE scan of the input: the (id, vec) projection is materialized,
+    # and both the block count and the packing read that copy (the block
+    # count must be known before packing, so it cannot come from the
+    # packed blocks themselves)
+    df = df.select(id_col, vec_col).localCheckpoint(eager=True)
     n = df.count()
     nblocks = max(1, math.ceil(n / block))
     blocks = _pack_blocks(df, nblocks, vec_col=vec_col, id_col=id_col)

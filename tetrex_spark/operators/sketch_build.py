@@ -50,7 +50,7 @@ SKETCH_ROW_SCHEMA = T.StructType(
     ]
 )
 
-KEY_SOURCES = ("token_shingle", "char_kgram", "token", "dgram")
+KEY_SOURCES = ("token_shingle", "char_kgram", "token", "dgram", "char")
 VALUE_SOURCES = ("doc_length_chars", "doc_length_tokens")
 DGRAM_PAD = 3  # fixed 3+3 d-gram pads, like the reference (dGramIndex.h)
 
@@ -60,8 +60,8 @@ class SketchSpec:
     """One sketch to build: which kernel, over which derived keys/values."""
 
     name: str
-    kind: str  # bloom | hll | cms | kll | tdigest
-    source: str  # token_shingle | char_kgram | token | dgram | doc_length_*
+    kind: str  # bloom | hll | cms | kll | tdigest | charset
+    source: str  # token_shingle | char_kgram | token | dgram | char | doc_length_*
     k: int = 3  # shingle/gram width; for source='dgram' the GAP length
     params: dict = field(default_factory=dict)
     seed: int = 42
@@ -134,6 +134,11 @@ class _BatchDerived:
 
             grams, counts = self._char_grams(DGRAM_PAD, spec.seed)
             return dgram_keys_from_chargrams(grams, counts, spec.k, DGRAM_PAD)
+        if spec.source == "char":
+            # code points of the same normalized text the char-kgram
+            # Bloom hashes (spec.k and seed do not apply)
+            cps = np.frombuffer("".join(self.text).encode("utf-32-le"), dtype=np.uint32)
+            return cps, self.text.str.len().to_numpy(dtype=np.int64)
         if spec.source == "doc_length_chars":
             vals = self.text.str.len().fillna(0).to_numpy(dtype=np.float64)
             return vals, np.ones(len(self.text), dtype=np.int64)
@@ -158,6 +163,10 @@ def _dense_bytes(spec: SketchSpec) -> int:
         return 1 << p["p"]
     if spec.kind == "cms":
         return p["width"] * p["depth"] * 8
+    if spec.kind == "charset":
+        # the dense form is already the distinct set, never larger than a
+        # key buffer: materialize on the first segment
+        return 0
     return 4096  # kll / tdigest payloads are small and value-count-bound
 
 
@@ -438,6 +447,12 @@ def max_bin_cardinality(corpus: DataFrame, source: str, k: int) -> int:
     pure JVM expressions (one cheap aggregate scan, no UDF) — the analog
     of find_largest_bin (/root/reference/include/index_ibf.h:133-139).
     Counts are pre-dedup (an overestimate of distinct keys, hence safe)."""
+    return max_bin_cardinalities(corpus, source, [k])[0]
+
+
+def max_bin_cardinalities(corpus: DataFrame, source: str, ks: list[int]) -> list[int]:
+    """`max_bin_cardinality` for several widths in the same aggregate
+    scan: element i is exactly max_bin_cardinality(corpus, source, ks[i])."""
     html_text = (
         F.regexp_replace(F.decode(F.col("html"), "UTF-8"), "<[^>]*>", " ")
         if "html" in corpus.columns
@@ -445,20 +460,20 @@ def max_bin_cardinality(corpus: DataFrame, source: str, k: int) -> int:
     )
     text = F.coalesce(F.col("text"), html_text, F.lit(""))
     if source == "char_kgram":
-        cnt = F.greatest(F.length(text) - F.lit(k - 1), F.lit(0))
+        cnts = [F.greatest(F.length(text) - F.lit(k - 1), F.lit(0)) for k in ks]
     elif source in ("token_shingle", "token"):
         ntok = F.size(F.split(F.trim(text), r"\s+"))
-        w = 1 if source == "token" else k
-        cnt = F.greatest(ntok - F.lit(w - 1), F.lit(0))
+        ws = [1 if source == "token" else k for k in ks]
+        cnts = [F.greatest(ntok - F.lit(w - 1), F.lit(0)) for w in ws]
     else:
         raise ValueError(f"not a key source: {source}")
     row = (
         corpus.groupBy("bin_id")
-        .agg(F.sum(cnt).alias("n"))
-        .agg(F.max("n").alias("mx"))
+        .agg(*[F.sum(c).alias(f"n{i}") for i, c in enumerate(cnts)])
+        .agg(*[F.max(f"n{i}").alias(f"mx{i}") for i in range(len(cnts))])
         .collect()[0]
     )
-    return int(row["mx"] or 0)
+    return [int(row[f"mx{i}"] or 0) for i in range(len(cnts))]
 
 
 def collect_sketches(sketch_df: DataFrame) -> dict[tuple[int, str], object]:

@@ -19,6 +19,7 @@ redmap_ before matching).
 from __future__ import annotations
 
 import re
+import warnings
 from typing import Iterator
 
 import pandas as pd
@@ -47,6 +48,19 @@ def prune_to_bins(corpus: DataFrame, bin_ids: list[int], n_bins: int) -> DataFra
     return corpus.filter(F.col("bin_id").isin(bin_ids))
 
 
+def _prefilter(text: pd.Series, rx: re.Pattern) -> pd.Series:
+    """Vectorized per-doc `rx.search` hit mask over one Arrow batch. For a
+    pattern with a group pandas warns (once per call) that str.extract
+    would return the groups; only the mask is wanted, so that warning is
+    silenced here and nowhere else."""
+    with warnings.catch_warnings():
+        warnings.filterwarnings(
+            "ignore", message="This pattern is interpreted as a regular expression",
+            category=UserWarning,
+        )
+        return text.str.contains(rx)
+
+
 def _verify_batches(pattern: str, id_col: str, has_html: bool):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rx = re.compile(pattern, re.IGNORECASE)
@@ -62,7 +76,7 @@ def _verify_batches(pattern: str, id_col: str, has_html: bool):
             # pruned-bin scan most rows are Bloom false positives or
             # bin co-residents, so this skips the Python loop for the
             # overwhelming majority of rows
-            hit = text.str.contains(rx).to_numpy()
+            hit = _prefilter(text, rx).to_numpy()
             urls, matches, starts, ends = [], [], [], []
             for url, doc in zip(
                 pdf[id_col].to_numpy()[hit], text.to_numpy()[hit]
@@ -145,7 +159,7 @@ def verify_regex_many(
                     sub_text, sub_urls = text[mask], urls[mask]
                 else:
                     sub_text, sub_urls = text, urls
-                hit = sub_text.str.contains(rx).to_numpy()
+                hit = _prefilter(sub_text, rx).to_numpy()
                 for url, doc in zip(
                     sub_urls[hit], sub_text.to_numpy()[hit]
                 ):
@@ -176,7 +190,7 @@ def verify_conjunctive(corpus: DataFrame, patterns: list[str], id_col: str = "ur
             )
             mask = pd.Series(True, index=text.index)
             for rx in rxs:
-                mask &= text.str.contains(rx)
+                mask &= _prefilter(text, rx)
             yield pdf.loc[mask.to_numpy(), [id_col]]
 
     return corpus.select(*cols).mapInPandas(

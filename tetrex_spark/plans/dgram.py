@@ -18,13 +18,23 @@ probe (same two-arity rule as every hash in this library).
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+import json
+import os
 
+import numpy as np
+from pyspark.sql import DataFrame
+
+from ..functions.text import TOKENIZER_VERSION
 from ..kernel.hashing import combine_dgram, hash_str
 from ..kernel.bloom import bloom_m_bits
-from ..operators.sketch_build import DGRAM_PAD, SketchSpec
-from ..sources.sketch_store import BloomMatrix, read_manifest, read_sketch_rows
+from ..operators.sketch_build import DGRAM_PAD, SketchSpec, build_sketches
+from ..sources.sketch_store import (
+    MANIFEST_NAME,
+    BloomMatrix,
+    read_manifest,
+    rows_by_name,
+    rows_for_write,
+)
 
 DGRAM_PREFIX = "dgram_bloom_g"
 PAD = DGRAM_PAD  # fixed 3+3 pads, like the reference (dGramIndex.h pad_)
@@ -56,48 +66,66 @@ def build_dgram_index(
 ) -> None:
     """Build gapped-gram Blooms (one sketch name per gap) into an index
     dir — appends to the dir's manifest if one exists (track runs after
-    index, like the reference)."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
+    index, like the reference). Sizes the filters with its own JVM-only
+    aggregate; MotifIndex.track reuses the bound its build recorded."""
+    from ..operators.sketch_build import max_bin_cardinality
     from ..sources.corpus import with_bin_id
-
-    # Guard against binning d-grams with a different modulus than the
-    # existing index (same pattern as the tokenizer_version check in
-    # read_manifest): a mismatched n_bins would AND mis-mapped bin vectors
-    # into query paths — silent recall loss, not an error.
-    manifest_path = f"{path}/manifest.json"
-    manifest = {}
-    if os.path.exists(manifest_path):
-        with open(manifest_path) as f:
-            manifest = json.load(f)
-        if manifest.get("n_bins") not in (None, n_bins):
-            raise ValueError(
-                f"n_bins={n_bins} does not match the existing index manifest "
-                f"(n_bins={manifest['n_bins']}) at {path}; pass n_bins="
-                f"{manifest['n_bins']} (the CLI does this automatically)"
-            )
 
     binned = (
         corpus
         if "bin_id" in corpus.columns
         else with_bin_id(corpus, n_bins, bin_key=bin_key)
     )
-    # size by the largest bin's char count (upper bound on d-grams per gap)
-    from ..operators.sketch_build import build_sketches, max_bin_cardinality
+    # size by the largest bin's char-PAD-gram count (upper bound on
+    # d-grams per gap)
+    write_dgrams(
+        binned, path, n_bins, max_bin_cardinality(binned, "char_kgram", PAD),
+        min_gap=min_gap, max_gap=max_gap, fpr=fpr, n_hashes=n_hashes, seed=seed,
+    )
 
-    n_max = max_bin_cardinality(binned, "char_kgram", PAD)
+
+def write_dgrams(
+    binned: DataFrame,
+    path: str,
+    n_bins: int,
+    n_max: int,
+    *,
+    min_gap: int,
+    max_gap: int,
+    fpr: float,
+    n_hashes: int = 3,
+    seed: int = 42,
+) -> tuple["DGramIndex", dict]:
+    """One kernel pass over `binned` for every gap in [min_gap, max_gap]
+    (Blooms sized for `n_max` keys per bin), appended to `path`'s rows
+    table, with the dir's manifest (a fresh one when it has none)
+    extended and rewritten; returns (index, the manifest written). The
+    rows are persisted once, collected and written from that cache; the
+    index is built from the collected rows, so nothing is read back.
+
+    One SketchSpec per gap through the SHARED compact-partial build:
+    the char-PAD-gram pass is computed once per batch and shared by every
+    gap spec via the _BatchDerived cache, and the two-level merge tree
+    caps fan-in exactly like the main build."""
+    manifest = {
+        "format_version": 1,
+        "tokenizer_version": TOKENIZER_VERSION,
+        "n_bins": n_bins,
+        "specs": [],
+    }
+    if os.path.exists(f"{path}/{MANIFEST_NAME}"):
+        manifest = read_manifest(path)
+        # Guard against binning d-grams with a different modulus than
+        # the existing index (same pattern as the tokenizer_version check
+        # in read_manifest): a mismatched n_bins would AND mis-mapped bin
+        # vectors into query paths — silent recall loss, not an error.
+        if manifest.get("n_bins") not in (None, n_bins):
+            raise ValueError(
+                f"n_bins={n_bins} does not match the existing index manifest "
+                f"(n_bins={manifest['n_bins']}) at {path}; pass n_bins="
+                f"{manifest['n_bins']} (the CLI does this automatically)"
+            )
     m_bits = bloom_m_bits(n_max, fpr)
-    # one SketchSpec per gap through the SHARED compact-partial builder:
-    # partials ship unique keys while that beats the bitmap and spill to
-    # dense past 2x (the bespoke builder here used to emit up to
-    # bins x gaps DENSE bitmaps per task — 1,344 per task at 64x21); the
-    # char-PAD-gram pass is computed once per batch and shared by every
-    # gap spec via the _BatchDerived cache, and the two-level merge tree
-    # caps fan-in exactly like the main build.
     specs = [
         SketchSpec(
             f"{DGRAM_PREFIX}{gap}", "bloom", "dgram", k=gap,
@@ -105,27 +133,27 @@ def build_dgram_index(
         )
         for gap in range(min_gap, max_gap + 1)
     ]
-    rows = build_sketches(binned, specs)
-    rows.write.mode("append").partitionBy("name").parquet(f"{path}/rows")
-
-    if not manifest:
-        from ..functions.text import TOKENIZER_VERSION
-
-        manifest = {
-            "format_version": 1,
-            "tokenizer_version": TOKENIZER_VERSION,
-            "n_bins": n_bins,
-            "specs": [],
-        }
-    manifest["dgram"] = {
-        "min_gap": min_gap,
-        "max_gap": max_gap,
-        "m_bits": m_bits,
-        "n_hashes": n_hashes,
-        "seed": seed,
+    rows = build_sketches(binned, specs).persist()
+    try:
+        collected = rows.collect()
+        n_bytes = sum(len(r["payload"]) for r in collected)
+        out = rows_for_write(rows, n_bytes)
+        out.write.mode("append").partitionBy("name").parquet(f"{path}/rows")
+    finally:
+        rows.unpersist()
+    manifest = {
+        **manifest,
+        "dgram": {
+            "min_gap": min_gap,
+            "max_gap": max_gap,
+            "m_bits": m_bits,
+            "n_hashes": n_hashes,
+            "seed": seed,
+        },
     }
-    with open(manifest_path, "w") as f:
+    with open(f"{path}/{MANIFEST_NAME}", "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
+    return DGramIndex.from_rows(manifest, rows_by_name(collected)), manifest
 
 
 class DGramIndex:
@@ -142,20 +170,19 @@ class DGramIndex:
         self.seed = seed
 
     @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "DGramIndex | None":
-        manifest = read_manifest(path)
+    def from_rows(cls, manifest: dict,
+                  rows: dict[str, list[tuple[int, bytes]]]) -> "DGramIndex | None":
+        """Stack the manifest's gap range from rows split by sketch name
+        (sources.sketch_store.rows_by_name); None for an untracked index."""
         cfg = manifest.get("dgram")
         if not cfg:
             return None
-        matrices = {}
-        for gap in range(cfg["min_gap"], cfg["max_gap"] + 1):
-            name = f"{DGRAM_PREFIX}{gap}"
-            rows = [
-                (r["bin_id"], bytes(r["payload"]))
-                for r in read_sketch_rows(spark, path, name).collect()
-            ]
-            if rows:
-                matrices[gap] = BloomMatrix.from_rows(rows, manifest["n_bins"])
+        names = {g: f"{DGRAM_PREFIX}{g}" for g in range(cfg["min_gap"], cfg["max_gap"] + 1)}
+        matrices = {
+            gap: BloomMatrix.from_rows(rows[name], manifest["n_bins"])
+            for gap, name in names.items()
+            if rows.get(name)
+        }
         return cls(matrices, manifest["n_bins"], cfg["min_gap"], cfg["max_gap"],
                    cfg.get("seed", 42))
 

@@ -25,6 +25,19 @@ from ..operators.sketch_build import SketchSpec
 
 MANIFEST_NAME = "manifest.json"
 FORMAT_VERSION = 1
+# bytes per rows file: AQE's default advisory partition size, which is what
+# a freshly planned build coalesces its output to
+ROWS_FILE_BYTES = 64 << 20
+
+
+def rows_for_write(rows: DataFrame, payload_bytes: int) -> DataFrame:
+    """Persisted sketch rows holding `payload_bytes` of payload, laid out
+    for writing: one partition per ROWS_FILE_BYTES, rows in (name, bin_id)
+    order. A persisted build output keeps its shuffle partition count, so
+    written unchanged it would split the table into one small file per
+    shuffle partition and sketch name."""
+    n_files = max(1, -(-payload_bytes // ROWS_FILE_BYTES))
+    return rows.coalesce(n_files).sortWithinPartitions("name", "bin_id")
 
 
 def write_sketch_table(
@@ -35,7 +48,8 @@ def write_sketch_table(
     *,
     build_id: str = "build-0",
     extra: dict | None = None,
-) -> None:
+) -> dict:
+    """Write the rows table and the manifest; returns the manifest."""
     sketch_df.write.mode("overwrite").partitionBy("name").parquet(f"{path}/rows")
     manifest = {
         "format_version": FORMAT_VERSION,
@@ -48,6 +62,7 @@ def write_sketch_table(
     os.makedirs(path, exist_ok=True)
     with open(f"{path}/{MANIFEST_NAME}", "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
+    return manifest
 
 
 def read_manifest(path: str) -> dict:
@@ -62,11 +77,17 @@ def read_manifest(path: str) -> dict:
     return manifest
 
 
-def read_sketch_rows(spark: SparkSession, path: str, name: str | None = None) -> DataFrame:
-    df = spark.read.parquet(f"{path}/rows")
-    if name is not None:
-        df = df.filter(df["name"] == name)  # partition-pruned scan
-    return df
+def read_sketch_rows(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.parquet(f"{path}/rows")
+
+
+def rows_by_name(rows) -> dict[str, list[tuple[int, bytes]]]:
+    """Collected sketch rows -> {name: [(bin_id, payload), ...]} — one
+    split of a single collected scan instead of one read per name."""
+    out: dict[str, list[tuple[int, bytes]]] = {}
+    for r in rows:
+        out.setdefault(r["name"], []).append((r["bin_id"], bytes(r["payload"])))
+    return out
 
 
 def spec_from_manifest(manifest: dict, name: str) -> SketchSpec:
@@ -97,6 +118,8 @@ class BloomMatrix:
 
     @classmethod
     def from_rows(cls, rows: list[tuple[int, bytes]], n_bins: int) -> "BloomMatrix":
+        if not rows:
+            raise ValueError("no bloom rows to stack")
         first = from_bytes(rows[0][1])
         m_bits, n_hashes = first.m_bits, first.n_hashes
         matrix = np.zeros((n_bins, m_bits // 8), dtype=np.uint8)
@@ -106,17 +129,6 @@ class BloomMatrix:
                 raise ValueError("inconsistent bloom rows")
             matrix[bin_id] = np.frombuffer(body, dtype=np.uint8)
         return cls(n_bins, m_bits, n_hashes, matrix)
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str, name: str) -> "BloomMatrix":
-        manifest = read_manifest(path)
-        rows = [
-            (r["bin_id"], bytes(r["payload"]))
-            for r in read_sketch_rows(spark, path, name).collect()
-        ]
-        if not rows:
-            raise ValueError(f"no sketch rows for {name!r} at {path}")
-        return cls.from_rows(rows, manifest["n_bins"])
 
     def probe(self, keys: np.ndarray) -> np.ndarray:
         """(n_keys,) uint64 -> (n_keys, n_bins) bool membership matrix."""
